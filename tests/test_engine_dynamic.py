@@ -116,19 +116,25 @@ def test_screen_coverage_telemetry(spark):
 
 def test_compiled_screen_memoization(spark):
     """The staged screen's Column tree costs ~0.9 s of py4j round trips to
-    build — engine._compiled_screens must reuse it per (app, schema, col)
-    and key on the application id so a session restart can't serve stale
-    JVM references."""
+    build — engine._compiled_screens must reuse it per (context, schema,
+    col) and key on the SparkContext object so a session restart can't
+    serve stale JVM references."""
     import json as _json
 
-    from yaschva_spark.engine import _SCREEN_CACHE, _compiled_screens
+    from yaschva_spark.engine import _MEMO, _compiled_screens
 
+    sc = spark.sparkContext
     blob = _json.dumps({"k": "integer"})
-    a = _compiled_screens("app-1", blob, "js")
-    b = _compiled_screens("app-1", blob, "js")
-    assert a is b  # cache hit: identical tuple object
-    c = _compiled_screens("app-2", blob, "js")
-    assert c is not a  # new application id -> fresh compilation
+    a = _compiled_screens(sc, blob, "js")
+    b = _compiled_screens(sc, blob, "js")
+    assert a is b  # memo hit: identical tuple object
+
+    class OtherContext:  # a different live context, as far as the key goes
+        _jsc = object()
+
+    other_ctx = OtherContext()
+    c = _compiled_screens(other_ctx, blob, "js")
+    assert c is not a  # new context -> fresh compilation
     # negative results (unscreenable shapes) cache as the exception
     import pytest as _pytest
 
@@ -136,7 +142,82 @@ def test_compiled_screen_memoization(spark):
 
     bad = _json.dumps({"k": "noSuchType"})
     with _pytest.raises(ScreenNotApplicable):
-        _compiled_screens("app-1", bad, "js")
-    assert isinstance(_SCREEN_CACHE[("app-1", bad, "js")], ScreenNotApplicable)
+        _compiled_screens(sc, bad, "js")
+    assert isinstance(_MEMO[(sc, "screen", bad, "js")], ScreenNotApplicable)
     with _pytest.raises(ScreenNotApplicable):
-        _compiled_screens("app-1", bad, "js")
+        _compiled_screens(sc, bad, "js")
+    # a stopped context's entries are dropped at the next insertion
+    other_ctx._jsc = None
+    _compiled_screens(sc, _json.dumps({"memo_purge_probe": "integer"}), "js")
+    assert not any(k[0] is other_ctx for k in _MEMO)
+
+
+def test_compile_memo_is_bounded_lru(spark, monkeypatch):
+    """A long-lived driver cycling through many schemas must not grow the
+    compile memo without bound: past _MEMO_SIZE the least recently used
+    entry is evicted, and a hit refreshes an entry's recency."""
+    from collections import OrderedDict
+
+    from yaschva_spark import engine
+
+    monkeypatch.setattr(engine, "_MEMO", OrderedDict())
+    monkeypatch.setattr(engine, "_MEMO_SIZE", 4)
+    sc = spark.sparkContext
+    builds = []
+
+    def get(i):
+        return engine._memoized(sc, ("t", i), lambda: builds.append(i) or f"v{i}", ValueError)
+
+    for i in range(4):
+        assert get(i) == f"v{i}"
+    assert get(0) == "v0" and builds == [0, 1, 2, 3]  # hit refreshes key 0
+    get(4)  # over the bound: evicts key 1, the least recently used
+    assert len(engine._MEMO) == 4
+    assert (sc, "t", 1) not in engine._MEMO
+    assert (sc, "t", 0) in engine._MEMO and (sc, "t", 4) in engine._MEMO
+    get(1)
+    assert builds == [0, 1, 2, 3, 4, 1]  # the evicted entry rebuilds
+
+
+def test_json_table_rejects_reserved_column_prefix(spark):
+    """Input columns named __yv_* would collide with the screened plan's
+    own routing and staging columns: refuse them up front."""
+    df = spark.createDataFrame([(1, '{"k": 1}')], "__yv_screen long, js string")
+    with pytest.raises(ValueError, match="__yv_"):
+        validate_json_table(df, {"k": "integer"}, "js")
+
+
+def test_compile_memo_threads_keep_the_bound(spark, monkeypatch):
+    """foreachBatch functions of concurrent streaming queries share the
+    memo from different threads: hammered by more threads than cores,
+    every call returns its own key's value and the bound holds."""
+    import sys
+    import threading
+    from collections import OrderedDict
+
+    from yaschva_spark import engine
+
+    monkeypatch.setattr(engine, "_MEMO", OrderedDict())
+    monkeypatch.setattr(engine, "_MEMO_SIZE", 5)
+    sc = spark.sparkContext
+    wrong = []
+
+    def worker(t):
+        for i in range(300):
+            k = (t * 7 + i) % 13
+            if engine._memoized(sc, ("t", k), lambda k=k: ("v", k), ValueError) != ("v", k):
+                wrong.append(k)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert wrong == []
+    assert len(engine._MEMO) <= 5

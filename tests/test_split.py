@@ -130,6 +130,10 @@ def test_cap_per_stratum_validates(spark):
         cap_per_stratum(docs, "doc_id", "source", 3, chunks=0)
     with pytest.raises(ValueError):
         cap_per_stratum(docs, "doc_id", "source", 3, chunks="bogus")
+    # bool is an int subclass: chunks=True must not run silently as 1
+    for flag in (True, False):
+        with pytest.raises(ValueError, match="chunks"):
+            cap_per_stratum(docs, "doc_id", "source", 3, chunks=flag)
 
 
 def test_cap_per_stratum_auto_chunks_skewed(spark):

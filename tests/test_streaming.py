@@ -317,3 +317,132 @@ def test_incremental_sink_clean_stream_leaves_readable_violations(spark, tmp_pat
     viol = spark.read.parquet(str(out / "violations"))  # must not throw
     assert viol.count() == 0
     assert "rule" in viol.columns and "field_path" in viol.columns
+
+
+_MANIFEST_DTYPES = [
+    ("n_rows", "bigint"),
+    ("n_invalid_rows", "bigint"),
+    ("n_violations", "bigint"),
+    ("content_digest", "bigint"),
+    ("stream_id", "string"),
+    ("processed_at", "timestamp"),
+    ("batch_id", "int"),
+]
+_MANIFEST_NUMBERS = ("n_rows", "n_invalid_rows", "n_violations", "content_digest")
+
+
+def _manifest_aggregate(validated):
+    return validated.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum((~F.col(PASS_COL)).cast("long")).alias("n_invalid_rows"),
+        F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
+        F.bit_xor(
+            F.conv(F.substring(F.sha2(F.col("content"), 256), 1, 15), 16, 10).cast("long")
+        ).alias("content_digest"),
+    )
+
+
+def test_batch_manifest_row_equals_batch_aggregate(spark, tmp_path):
+    """The driver-written manifest row (from the violations write's
+    Observation) equals an aggregate over validate_table for the same
+    batch, with the manifest's column names and Spark types — an empty
+    batch included (count 0, NULL sums, as the aggregate gives)."""
+    from yaschva_spark.fixtures import CODE_SCHEMA, code_files
+
+    code = code_files(spark, 800, seed=24)
+    out = tmp_path / "obs_out"
+    fn = streaming.make_batch_validator(CODE_SCHEMA, str(out), stream_id="s1")
+    batches = {7: code, 8: code.filter(F.lit(False))}
+    for batch_id, batch in batches.items():
+        fn(batch, batch_id)
+    man = spark.read.parquet(str(out / "manifest"))
+    assert man.dtypes == _MANIFEST_DTYPES
+    rows = {r["batch_id"]: r for r in man.collect()}
+    assert sorted(rows) == [7, 8]
+    for batch_id, batch in batches.items():
+        want = _manifest_aggregate(validate_table(batch, CODE_SCHEMA)).collect()[0]
+        assert {k: rows[batch_id][k] for k in _MANIFEST_NUMBERS} == want.asDict()
+        assert rows[batch_id]["stream_id"] == "s1"
+    assert rows[7]["n_violations"] > 0 and rows[8]["n_rows"] == 0
+    viol = spark.read.parquet(str(out / "violations"))
+    assert viol.count() == rows[7]["n_violations"]
+
+
+def test_manifest_mixes_spark_and_driver_written_partitions(spark, tmp_path):
+    """An out_dir whose manifest holds a partition written by the Spark
+    writer (the form earlier releases used) and one written by the driver
+    reads back as one table with mergeSchema off."""
+    from yaschva_spark.fixtures import CODE_SCHEMA, code_files
+
+    out = tmp_path / "mixed_out"
+    old = code_files(spark, 300, seed=25)
+    (
+        _manifest_aggregate(validate_table(old, CODE_SCHEMA))
+        .withColumn("batch_id", F.lit(0))
+        .withColumn("stream_id", F.lit("s"))
+        .withColumn("processed_at", F.current_timestamp())
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(str(out / "manifest"))
+    )
+    new = code_files(spark, 400, seed=26)
+    streaming.make_batch_validator(CODE_SCHEMA, str(out), stream_id="s")(new, 1)
+    man = spark.read.option("mergeSchema", "false").parquet(str(out / "manifest"))
+    assert man.dtypes == _MANIFEST_DTYPES
+    rows = {r["batch_id"]: r for r in man.collect()}
+    assert sorted(rows) == [0, 1]
+    assert (rows[0]["n_rows"], rows[1]["n_rows"]) == (300, 400)
+    assert all(r["processed_at"] is not None and r["stream_id"] == "s" for r in rows.values())
+
+
+def test_batch_crash_publishes_nothing_and_replay_matches_clean_run(spark, tmp_path, monkeypatch):
+    """Crash injection: a batch whose violations write raises leaves no
+    manifest partition; one that dies after the violations write but
+    before the manifest publish leaves no manifest partition either. A
+    replay of the batch then yields the same manifest and violations as a
+    clean run — nothing duplicated, nothing dropped."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from yaschva_spark.fixtures import CODE_SCHEMA, code_files
+
+    code = code_files(spark, 600, seed=27)
+    out = tmp_path / "crash_out"
+    fn = streaming.make_batch_validator(CODE_SCHEMA, str(out), stream_id="s")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            fn(code, 3)
+    assert not (out / "manifest" / "batch_id=3").exists()
+    with monkeypatch.context() as m:
+        m.setattr(streaming, "_publish_manifest_row", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            fn(code, 3)
+    assert (out / "violations" / "batch_id=3").exists()  # durable, not certified
+    assert not (out / "manifest" / "batch_id=3").exists()
+    fn(code, 3)  # the checkpoint's replay
+
+    clean = tmp_path / "clean_out"
+    streaming.make_batch_validator(CODE_SCHEMA, str(clean), stream_id="s")(code, 3)
+
+    def manifest(d):
+        return [
+            r.asDict()
+            for r in spark.read.parquet(str(d / "manifest")).drop("processed_at").collect()
+        ]
+
+    def violations(d):
+        return sorted(tuple(r) for r in spark.read.parquet(str(d / "violations")).collect())
+
+    assert len(manifest(out)) == 1
+    assert manifest(out) == manifest(clean)
+    assert violations(out) == violations(clean)
+    assert len(violations(out)) == manifest(out)[0]["n_violations"]
+    # no publish leftovers are visible to readers either
+    assert [p.name for p in (out / "manifest").iterdir() if not p.name.startswith(".")] == [
+        "batch_id=3"
+    ]

@@ -231,3 +231,53 @@ def test_astral_string_length_is_utf16(spark):
     a = validate_json_table(df2, schema2, "js", screen=True).collect()[0]["yv_valid"]
     b = validate_json_table(df2, schema2, "js", screen=False).collect()[0]["yv_valid"]
     assert a is True and b is True
+
+
+def _count_compiles(monkeypatch):
+    from yaschva_spark import engine
+
+    calls = []
+    real = engine.compile_schema
+
+    def counting(*args, **kwargs):
+        calls.append(args[0])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(engine, "compile_schema", counting)
+    return calls
+
+
+def test_validate_table_memo_hit_skips_compile(spark, monkeypatch):
+    """A second validate_table with the same (schema, input schema) reuses
+    the memoized Column tree — no compile_schema call — and returns the
+    same rows (the streaming sink relies on this once per micro-batch)."""
+    calls = _count_compiles(monkeypatch)
+    schema = {"memo_hit_id": "integer", "memo_hit_s": {"$string": {"maxLength": 2}}}
+    rows = [(1, "ab"), (2, "abc"), (None, None)]
+    ddl = "memo_hit_id long, memo_hit_s string"
+    first = validate_table(spark.createDataFrame(rows, ddl), schema).collect()
+    assert len(calls) == 1
+    second = validate_table(spark.createDataFrame(rows, ddl), schema).collect()
+    assert len(calls) == 1  # memo hit
+    assert first == second
+    assert [r[PASS_COL] for r in second] == [True, False, False]
+
+
+def test_validate_table_memo_miss_recompiles(spark, monkeypatch):
+    """The memo key covers everything the compiled tree depends on: a
+    different input schema or different ignore_columns recompiles."""
+    calls = _count_compiles(monkeypatch)
+    schema = {"memo_miss_id": "integer"}
+    df_long = spark.createDataFrame([(1,)], "memo_miss_id long")
+    validate_table(df_long, schema)
+    assert len(calls) == 1
+    # same column name, different type: the typed dispatch differs
+    df_str = spark.createDataFrame([("1",)], "memo_miss_id string")
+    assert validate_table(df_str, schema).collect()[0][PASS_COL] is False
+    assert len(calls) == 2
+    df_extra = spark.createDataFrame([(1, 2)], "memo_miss_id long, memo_miss_x long")
+    assert validate_table(df_extra, schema).collect()[0][PASS_COL] is False  # extra key
+    assert len(calls) == 3
+    out = validate_table(df_extra, schema, ignore_columns=("memo_miss_x",))
+    assert len(calls) == 4
+    assert out.collect()[0][PASS_COL] is True

@@ -20,7 +20,9 @@ Two execution paths, chosen per schema:
 from __future__ import annotations
 
 import json
-from typing import Any, Iterator
+import threading
+from collections import OrderedDict
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -87,12 +89,22 @@ def validate_table(
     and :class:`TypedCompileError` when the schema needs the dynamic path.
     """
     check_schema(schema)
-    violations = compile_schema(
-        schema, df.schema, ignore_columns=tuple(ignore_columns), max_unroll=max_unroll
+    ignore = tuple(ignore_columns)
+    # The schema text keeps its key order: object keys order the
+    # violations, so key-sorted JSON would conflate different outputs.
+    # yv_valid reads yv_violations by name, so Catalyst keeps two stacked
+    # projections and evaluates the violations tree once; `size(<tree>)`
+    # in one projection would copy the whole tree into the plan.
+    violations, passed = _memoized(
+        df.sparkSession.sparkContext,
+        ("typed", json.dumps(schema), df.schema.json(), ignore, max_unroll),
+        lambda: (
+            compile_schema(schema, df.schema, ignore_columns=ignore, max_unroll=max_unroll),
+            F.size(F.col(VIOLATIONS_COL)) == 0,
+        ),
+        TypedCompileError,
     )
-    return df.withColumn(VIOLATIONS_COL, violations).withColumn(
-        PASS_COL, F.size(F.col(VIOLATIONS_COL)) == 0
-    )
+    return df.withColumn(VIOLATIONS_COL, violations).withColumn(PASS_COL, passed)
 
 
 def validate_auto(df: DataFrame, schema: Any, json_col: str | None = None, **kwargs) -> DataFrame:
@@ -128,28 +140,55 @@ def explode_violations(validated: DataFrame, id_cols: list[str]) -> DataFrame:
     )
 
 
-#: memoized staged screen compilations, keyed by (applicationId,
-#: schema-json, column). Building the Column tree costs hundreds of py4j
-#: round trips (~0.9 s measured for the nested schema) and is a pure
-#: function of the key; the applicationId guards against stale JVM refs
-#: after a session restart. Negative results (unscreenable) cache too.
-_SCREEN_CACHE: dict = {}
+#: Bounded memo of compiled Column trees: the typed ``violations`` column
+#: and the staged JSON screens. Building either costs hundreds to ~2,000
+#: py4j round trips (0.25-0.9 s measured) and is a pure function of the
+#: key, so a driver that validates the same schema again — every
+#: micro-batch of a stream — builds it once. Keys start with the live
+#: SparkContext object: a restarted session never receives Columns built
+#: for a stopped one, and entries of stopped contexts are dropped. At most
+#: ``_MEMO_SIZE`` entries are kept, least recently used evicted first, so
+#: a long-lived driver cycling through many schemas stays bounded.
+#: Negative results (schema outside the compiler's fragment) are memoized
+#: too, as the exception.
+_MEMO_SIZE = 32
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_LOCK = threading.Lock()
 
 
-def _compiled_screens(app_id: str, schema_blob: str, json_col: str):
-    from yaschva_spark.jsonscreen import ScreenNotApplicable, compile_screens
-
-    key = (app_id, schema_blob, json_col)
-    hit = _SCREEN_CACHE.get(key)
+def _memoized(sc, key: tuple, build: Callable[[], Any], negative: type[Exception]):
+    full = (sc, *key)
+    with _MEMO_LOCK:
+        hit = _MEMO.get(full)
+        if hit is not None:
+            _MEMO.move_to_end(full)
     if hit is None:
         try:
-            hit = compile_screens(json.loads(schema_blob), F.col(json_col), staged=True)
-        except ScreenNotApplicable as ex:
+            hit = build()
+        except negative as ex:
             hit = ex
-        _SCREEN_CACHE[key] = hit
+        with _MEMO_LOCK:
+            for stale in [k for k in _MEMO if k[0]._jsc is None]:
+                del _MEMO[stale]
+            _MEMO[full] = hit
+            while len(_MEMO) > _MEMO_SIZE:
+                _MEMO.popitem(last=False)
     if isinstance(hit, Exception):
-        raise hit
+        # drop the previous raise's frames: re-raising one instance on
+        # every call would otherwise grow its traceback without bound
+        raise hit.with_traceback(None)
     return hit
+
+
+def _compiled_screens(sc, schema_blob: str, json_col: str):
+    from yaschva_spark.jsonscreen import ScreenNotApplicable, compile_screens
+
+    return _memoized(
+        sc,
+        ("screen", schema_blob, json_col),
+        lambda: compile_screens(json.loads(schema_blob), F.col(json_col), staged=True),
+        ScreenNotApplicable,
+    )
 
 
 def validate_json_table(
@@ -221,7 +260,7 @@ def validate_json_table(
     can decide or render exactly — runs the interpreter. On the nested
     bench corpus the residue is 0%: every row is decided without crossing
     Arrow. The screen compiles STAGED (shared subexpressions as chained
-    projection columns, memoized per schema in _SCREEN_CACHE): measured at
+    projection columns, memoized per schema in _MEMO): measured at
     sf0.1, unstaged fail-side expressions re-walked the variant inside
     every consumer (~2.2 s/run), staging + memoization + the two-branch
     plan brought it to ~0.95 s, of which the per-row work is ~0.1 s — the
@@ -235,6 +274,15 @@ def validate_json_table(
     unscreenable.
     """
     check_schema(schema)
+    reserved = [c for c in df.columns if c.startswith("__yv_")]
+    if reserved:
+        # the screened plan adds its own __yv_* columns (staged
+        # subexpressions, routing flags); a same-named input column would
+        # be shadowed or make the names ambiguous
+        raise ValueError(
+            f"validate_json_table: input columns {reserved} use the reserved "
+            "'__yv_' prefix; rename them before validating"
+        )
     if observe is not None:
         _SCREEN_OBS.pop(observe, None)  # a stale observation must not answer
     keep = keep_cols if keep_cols is not None else [c for c in df.columns]
@@ -253,7 +301,7 @@ def validate_json_table(
             # columns evaluated ONCE per row — the unstaged tree re-walks
             # them inside every consumer (measured ~4x on the fail side)
             screen_levels, screens = _compiled_screens(
-                df.sparkSession.sparkContext.applicationId, schema_blob, json_col
+                df.sparkSession.sparkContext, schema_blob, json_col
             )
         except ScreenNotApplicable:
             screens = None

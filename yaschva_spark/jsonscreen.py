@@ -996,14 +996,6 @@ def compile_pass_screen(schema: Any, raw: Column) -> Column:
     return F.coalesce(_compile(schema, raw).cond, F.lit(False))
 
 
-def pass_output_col(schema: Any, raw: Column) -> Column:
-    """The interpreter's ``yv_output`` JSON for a row PROVEN passing by
-    :func:`compile_pass_screen`, built JVM-side — null at every leaf, and
-    in the interpreter's key order (DATA order first, then missing
-    declared keys in schema order; interp._v_object)."""
-    return _compile(schema, raw).out
-
-
 def compile_screens(schema: Any, raw: Column, staged: bool = False):
     """One compilation, both screens (r5). Returns
 

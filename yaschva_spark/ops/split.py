@@ -226,7 +226,8 @@ def cap_per_stratum(
         raise ValueError("cap must be >= 0")
     if chunks == "auto":
         chunks = choose_cap_chunks(df, strata_col, rows_per_task)
-    if not isinstance(chunks, int) or chunks < 1:
+    # bool is an int subclass: chunks=True would run silently as 1
+    if not isinstance(chunks, int) or isinstance(chunks, bool) or chunks < 1:
         raise ValueError("chunks must be >= 1 or 'auto'")
     out_cols = df.columns
     dfb = df.withColumn("__b", _bucket_col(id_col, seed))

@@ -7,7 +7,7 @@ layer: windowed violation-rate monitoring uses event-time windows + a
 watermark so late events are bounded and state is evictable.
 
 At scale this is the continuous-ingest shape of the north rule: a code-file
-firehose validated in-flight, violation rows appended to the sink, windowed
+firehose validated in-flight, violation rows written per batch, windowed
 violation rates feeding alerting. ``trigger(availableNow=True)`` turns the
 same query into a catch-up batch over a backlog — the streaming analog of
 the pipeline's checkpoint resume (plus Spark's own checkpointLocation for
@@ -16,7 +16,9 @@ exactly-once sinks).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -120,27 +122,23 @@ def dedup_stream(
     )
 
 
-def _write_empty_parquet(spark: SparkSession, df_schema, dest_file: str) -> None:
-    """Write a schema-bearing 0-row parquet file at ``dest_file`` through
-    the Hadoop FileSystem API (any scheme). Spark itself skips file
-    creation for empty tasks, so an all-clean stream would otherwise leave
-    a violations path that ``spark.read.parquet`` can't infer a schema
-    from."""
+def _write_parquet_file(spark: SparkSession, table, dest_file: str) -> None:
+    """Write a pyarrow ``table`` as one parquet file at ``dest_file``
+    through the Hadoop FileSystem API (any scheme)."""
     import io
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     from yaschva_spark.pipeline import _hadoop_fs
 
     buf = io.BytesIO()
-    arrow = to_arrow_schema(df_schema)
-    pq.write_table(arrow.empty_table(), buf)
+    pq.write_table(table, buf)
     fs, jpath, _ = _hadoop_fs(spark, dest_file)
     out = fs.create(jpath, True)
-    out.write(bytearray(buf.getvalue()))
-    out.close()
+    try:
+        out.write(bytearray(buf.getvalue()))
+    finally:
+        out.close()
 
 
 def _dir_has_parquet(fs, jpath) -> bool:
@@ -155,6 +153,45 @@ def _dir_has_parquet(fs, jpath) -> bool:
     return False
 
 
+def _publish_manifest_row(
+    spark: SparkSession, man_path: str, batch_id: int, metrics: dict, stream_id: str
+) -> None:
+    """Write the batch's one manifest row from the driver and make it
+    visible atomically: the parquet file goes into a ``_tmp_*`` directory
+    under ``man_path`` (hidden from readers: Spark skips ``_``-prefixed
+    names without ``=``), which is then renamed to ``batch_id=N`` — the
+    commit-marker publish of Delta Lake (VLDB 2020). The file holds the
+    same columns and Spark types as a Spark-written manifest partition
+    (bigint x4, string, timestamp), so old and new partitions read back
+    together."""
+    import uuid
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+
+    from yaschva_spark.pipeline import _hadoop_delete, _hadoop_fs
+
+    longs = ("n_rows", "n_invalid_rows", "n_violations", "content_digest")
+    table = pa.table(
+        {
+            **{k: pa.array([metrics[k]], pa.int64()) for k in longs},
+            "stream_id": pa.array([stream_id], pa.string()),
+            "processed_at": pa.array([datetime.now(timezone.utc)], pa.timestamp("us", tz="UTC")),
+        }
+    )
+    tag = uuid.uuid4().hex
+    tmp = os.path.join(man_path, f"_tmp_{batch_id}_{tag}")
+    try:
+        _write_parquet_file(spark, table, os.path.join(tmp, f"part-00000-{tag}.parquet"))
+        fs, dst, jvm = _hadoop_fs(spark, os.path.join(man_path, f"batch_id={batch_id}"))
+        if fs.exists(dst):
+            fs.delete(dst, True)  # torn earlier attempt: the guard found no row
+        if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst):
+            raise OSError(f"incremental sink: could not publish manifest {dst}")
+    finally:
+        _hadoop_delete(spark, tmp)  # no-op after a clean rename
+
+
 def make_batch_validator(
     schema: dict,
     out_dir: str,
@@ -166,12 +203,12 @@ def make_batch_validator(
     """The ``foreachBatch`` function behind
     :func:`incremental_validation_sink`, exposed so the replay guard is
     directly testable. See that function for the durability contract."""
-    import os
-
     viol_path = os.path.join(out_dir, "violations")
     man_path = os.path.join(out_dir, "manifest")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from yaschva_spark.pipeline import _hadoop_fs
 
         spark = batch_df.sparkSession
@@ -200,7 +237,18 @@ def make_batch_validator(
                     "deleted/moved?): restore the original checkpoint or "
                     "use a fresh out_dir."
                 )
-        validated = validate_table(batch_df, schema)
+        # the manifest numbers ride on the violations write as one
+        # Observation: no second Spark job re-scans the batch for them
+        obs = Observation()
+        validated = validate_table(batch_df, schema).observe(
+            obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum((~F.col(PASS_COL)).cast("long")).alias("n_invalid_rows"),
+            F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
+            F.bit_xor(
+                F.conv(F.substring(F.sha2(F.col(content_col), 256), 1, 15), 16, 10).cast("long")
+            ).alias("content_digest"),
+        )
         viol = validated.select(
             F.lit(batch_id).alias("batch_id"),
             *[F.col(c) for c in id_cols],
@@ -216,38 +264,20 @@ def make_batch_validator(
             .partitionBy("batch_id")
             .parquet(viol_path)
         )
-        # an all-clean stream writes no violation files at all; seed one
-        # schema-bearing empty partition so the documented contract —
-        # "a manifest row certifies readable violations" — holds for
-        # consumers doing spark.read.parquet(viol_path)
+        # an all-clean stream writes no violation files at all (Spark
+        # skips file creation for empty tasks); seed one schema-bearing
+        # empty partition so the documented contract — "a manifest row
+        # certifies readable violations" — holds for consumers doing
+        # spark.read.parquet(viol_path)
         vfs, vroot, _ = _hadoop_fs(spark, viol_path)
         if not _dir_has_parquet(vfs, vroot):
-            _write_empty_parquet(
+            _write_parquet_file(
                 spark,
-                viol.drop("batch_id").schema,
+                to_arrow_schema(viol.drop("batch_id").schema).empty_table(),
                 os.path.join(viol_path, "batch_id=-1", "part-00000-init.parquet"),
             )
-        manifest = (
-            validated.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((~F.col(PASS_COL)).cast("long")).alias("n_invalid_rows"),
-                F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
-                F.bit_xor(
-                    F.conv(
-                        F.substring(F.sha2(F.col(content_col), 256), 1, 15), 16, 10
-                    ).cast("long")
-                ).alias("content_digest"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .withColumn("stream_id", F.lit(stream_id))
-            .withColumn("processed_at", F.current_timestamp())
-        )
-        (
-            manifest.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(man_path)
-        )
+        # violations are durable: only now may the manifest row appear
+        _publish_manifest_row(spark, man_path, batch_id, obs.get, stream_id)
 
     return process_batch
 
@@ -263,10 +293,18 @@ def incremental_validation_sink(
     available_now: bool = True,
 ) -> "StreamingQuery":  # noqa: F821
     """Continuous-ingest version of ``pipeline.run_validation_job``: each
-    micro-batch is validated with the same compiled schema and lands as
-    appended violation rows plus ONE manifest row per batch carrying the
-    same lineage metrics (row/violation counts, order-insensitive sha256
-    content digest, timestamp) keyed by ``batch_id``.
+    micro-batch is validated with the same compiled schema (memoized, so
+    it is built once per stream, not per batch) and lands as one
+    overwritten ``violations/batch_id=N`` partition plus ONE manifest row
+    per batch carrying the same lineage metrics (row/violation counts,
+    order-insensitive sha256 content digest, timestamp) keyed by
+    ``batch_id``.
+
+    One Spark job per batch: the manifest numbers are an ``Observation``
+    (a CollectMetrics node) on the violations write, and the driver writes
+    the manifest row itself with pyarrow into a hidden ``_tmp_*``
+    directory, then renames that directory to ``manifest/batch_id=N`` —
+    the row becomes visible all at once or not at all.
 
     Durability contract matches the batch pipeline: within a batch the
     violations write completes BEFORE the manifest row appears, so a
