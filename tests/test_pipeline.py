@@ -1,13 +1,15 @@
 """Synthetic code table + full validation job: injected violations are found
 at their designed rates, skew exists, and the manifest makes the job
-checkpoint-resumable."""
+checkpoint-resumable exactly once."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from yaschva_spark import checks
+from yaschva_spark import checks, pipeline
 from yaschva_spark.engine import PASS_COL, VIOLATIONS_COL, validate_table
 from yaschva_spark.fixtures import CODE_SCHEMA, HOT_REPO, code_files, repos_dim, with_content_sha
 from yaschva_spark.pipeline import add_bucket, run_validation_job
@@ -99,6 +101,8 @@ def test_pipeline_run_and_resume(spark, code, tmp_path):
     assert r2.n_buckets_processed == 4  # only the missing buckets
     assert r2.n_rows == full.n_rows
     assert r2.n_violations == full.n_violations
+    # the resume overwrote only its own buckets: the first run's rows stay
+    assert spark.read.parquet(f"{out2}/violations").count() == r2.n_violations
 
     # violations sink is partitioned by bucket and readable
     viol = spark.read.parquet(f"{out1}/violations")
@@ -120,3 +124,155 @@ def test_violations_sink_partition_pruning(spark, code, tmp_path):
     assert viol.count() > 0
     # pruned read sees exactly the one bucket
     assert viol.select("bucket").distinct().collect()[0][0] == 3
+
+
+# --- exactly-once sink --------------------------------------------------------
+
+_MANIFEST_DTYPES = [
+    ("bucket", "int"),
+    ("n_rows", "bigint"),
+    ("n_invalid_rows", "bigint"),
+    ("n_violations", "bigint"),
+    ("n_orphans", "bigint"),
+    ("n_repos", "bigint"),
+    ("content_digest", "bigint"),
+    ("processed_at", "timestamp"),
+]
+
+
+@pytest.fixture(scope="module")
+def clean(spark, code, tmp_path_factory):
+    """One uninterrupted job over ``code``: (out_dir, JobResult)."""
+    out = str(tmp_path_factory.mktemp("clean") / "out")
+    return out, run_validation_job(spark, code, repos_dim(spark), out, n_buckets=8)
+
+
+def _totals(res):
+    return (res.n_rows, res.n_invalid_rows, res.n_violations, res.n_dup_keys, res.n_orphans)
+
+
+def _sorted_rows(spark, path, drop=()):
+    df = spark.read.parquet(path).drop(*drop)
+    return df.orderBy(*df.columns).collect()
+
+
+def _spark_written_manifest(spark, code, path, *, buckets, with_orphans):
+    """A manifest part written by the Spark writer, in the shape earlier
+    releases produced (``current_timestamp()``, optionally without the
+    later ``n_orphans`` column)."""
+    validated = validate_table(add_bucket(code, 8), CODE_SCHEMA, ignore_columns=("yv_bucket",))
+    dim = F.broadcast(repos_dim(spark).select(F.col("repo").alias("__dim_repo")).distinct())
+    orphans = [F.sum(F.col("__dim_repo").isNull().cast("long")).alias("n_orphans")]
+    (
+        validated.filter(F.col("yv_bucket").isin(buckets))
+        .join(dim, validated["repo"] == F.col("__dim_repo"), "left")
+        .groupBy(F.col("yv_bucket").alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum((~F.col(PASS_COL)).cast("long")).alias("n_invalid_rows"),
+            F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
+            *(orphans if with_orphans else []),
+            F.approx_count_distinct("repo").alias("n_repos"),
+            F.bit_xor(
+                F.conv(F.substring(F.sha2(F.col("content"), 256), 1, 15), 16, 10).cast("long")
+            ).alias("content_digest"),
+            F.current_timestamp().alias("processed_at"),
+        )
+        .write.parquet(path)
+    )
+
+
+@pytest.mark.parametrize("crash_at", ["manifest_publish", "violations_write"])
+def test_crash_then_resume_matches_clean_run(spark, code, clean, tmp_path, monkeypatch, crash_at):
+    """Crash injection between the two writes: a job that dies after its
+    violations landed (the manifest publish raises, or the violations
+    write raises after writing its files) leaves no manifest rows, and the
+    resume yields the clean run's violations row for row and its totals —
+    nothing duplicated, nothing dropped."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    repos = repos_dim(spark)
+    out = str(tmp_path / "crash")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash")
+
+    orig_parquet = DataFrameWriter.parquet
+
+    def write_then_crash(self, *args, **kwargs):
+        orig_parquet(self, *args, **kwargs)
+        raise RuntimeError("injected crash")
+
+    with monkeypatch.context() as m:
+        if crash_at == "manifest_publish":
+            m.setattr(pipeline, "_hadoop_publish", crash)
+        else:
+            m.setattr(DataFrameWriter, "parquet", write_then_crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            run_validation_job(spark, code, repos, out, n_buckets=8)
+    assert len(list(Path(out, "violations").glob("bucket=*"))) == 8  # durable
+    man = Path(out, "manifest")
+    assert not man.exists() or not [p for p in man.iterdir() if not p.name.startswith(".")]
+
+    resumed = run_validation_job(spark, code, repos, out, n_buckets=8)
+    clean_out, clean_res = clean
+    assert resumed.n_buckets_processed == 8
+    assert _totals(resumed) == _totals(clean_res)
+    assert _sorted_rows(spark, f"{out}/violations") == _sorted_rows(
+        spark, f"{clean_out}/violations"
+    )
+    assert _sorted_rows(spark, f"{out}/manifest", ["processed_at"]) == _sorted_rows(
+        spark, f"{clean_out}/manifest", ["processed_at"]
+    )
+
+
+def test_manifest_reads_like_spark_written(spark, code, clean, tmp_path):
+    """The driver-written manifest has the Spark schema (int bucket,
+    bigints, timestamp) and the values the Spark writer produces."""
+    clean_out, _ = clean
+    legacy = str(tmp_path / "legacy")
+    _spark_written_manifest(spark, code, legacy, buckets=list(range(8)), with_orphans=True)
+    ours = spark.read.parquet(f"{clean_out}/manifest")
+    assert spark.read.parquet(legacy).dtypes == ours.dtypes == _MANIFEST_DTYPES
+    assert _sorted_rows(spark, legacy, ["processed_at"]) == _sorted_rows(
+        spark, f"{clean_out}/manifest", ["processed_at"]
+    )
+    assert ours.filter(F.col("processed_at").isNull()).count() == 0
+
+
+def test_resume_onto_spark_written_manifest_without_orphans(spark, code, clean, tmp_path):
+    """Resume onto an out_dir whose manifest holds a Spark-written part
+    from before ``n_orphans`` existed (the mergeSchema path): the job
+    processes only the other buckets and its totals stay right, the old
+    buckets counting no orphans."""
+    clean_out, clean_res = clean
+    out = str(tmp_path / "old")
+    _spark_written_manifest(spark, code, f"{out}/manifest", buckets=[0, 1, 2, 3], with_orphans=False)
+    res = run_validation_job(spark, code, repos_dim(spark), out, n_buckets=8)
+    assert res.n_buckets_processed == 4
+    assert (res.n_rows, res.n_invalid_rows, res.n_violations) == (
+        clean_res.n_rows, clean_res.n_invalid_rows, clean_res.n_violations,
+    )
+    new_orphans = (
+        spark.read.parquet(f"{clean_out}/manifest")
+        .filter(F.col("bucket") >= 4)
+        .agg(F.sum("n_orphans"))
+        .collect()[0][0]
+    )
+    assert res.n_orphans == new_orphans
+    merged = spark.read.option("mergeSchema", "true").parquet(f"{out}/manifest")
+    assert sorted(r["bucket"] for r in merged.select("bucket").collect()) == list(range(8))
+
+
+def test_one_violation_file_per_bucket(clean):
+    """Every bucket's violations are one file, and the buckets were written
+    by more than one task (the shuffle is not coalesced into one writer;
+    ``part-NNNNN`` is the writing task's partition id)."""
+    clean_out, _ = clean
+    files = [
+        [f.name for f in d.iterdir() if f.name.endswith(".parquet") and not f.name.startswith(".")]
+        for d in sorted(Path(clean_out, "violations").glob("bucket=*"))
+    ]
+    assert len(files) == 8
+    assert all(len(fs) == 1 for fs in files), files
+    assert len({fs[0][:10] for fs in files}) > 1, files

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from yaschva_spark.engine import PASS_COL, VIOLATIONS_COL, validate_table
+from yaschva_spark.pipeline import _write_parquet_file
 
 
 def read_stream(
@@ -120,25 +121,6 @@ def dedup_stream(
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["content_hash"])
     )
-
-
-def _write_parquet_file(spark: SparkSession, table, dest_file: str) -> None:
-    """Write a pyarrow ``table`` as one parquet file at ``dest_file``
-    through the Hadoop FileSystem API (any scheme)."""
-    import io
-
-    import pyarrow.parquet as pq
-
-    from yaschva_spark.pipeline import _hadoop_fs
-
-    buf = io.BytesIO()
-    pq.write_table(table, buf)
-    fs, jpath, _ = _hadoop_fs(spark, dest_file)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(buf.getvalue()))
-    finally:
-        out.close()
 
 
 def _dir_has_parquet(fs, jpath) -> bool:
