@@ -36,6 +36,34 @@ def _ensure_code_table(spark, n_rows: int, seed: int = 42) -> str:
     return path
 
 
+def headline(
+    timings: dict, sf: str, result, pipeline_sec: float, runs: list, load_avg: float
+) -> dict:
+    """The compact stdout payload. It must stay under the driver's ~2000
+    char tail capture (asserted in tests); detail goes to the file."""
+    return {
+        "metric": "validation_pipeline_sec",
+        "value": round(pipeline_sec, 4),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "total_sec": round(sum(timings.values()), 4),
+        "bench_rows": result.n_rows,
+        "rows_per_sec": round(result.n_rows / pipeline_sec, 1),
+        "n_violations": result.n_violations,
+        "n_dup_keys": result.n_dup_keys,
+        "n_orphans": result.n_orphans,
+        # ambient-load context: this host shows external multi-minute
+        # slow windows (BENCH/BASELINE.md); readers should weigh
+        # wall numbers against the load state they were taken in
+        "load_avg_1m": load_avg,
+        "pipeline_median_sec": round(sorted(runs)[len(runs) // 2], 4),
+        # r2-comparable raw statistic (the old headline)
+        "pipeline_min_sec": round(min(runs), 4),
+        "detail_file": "BENCH/last_run_detail.json",
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     bench_rows = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "2000000"))
@@ -159,7 +187,7 @@ def main() -> None:
     pipeline_sec = normalized[len(normalized) // 2]
     timings["validation_pipeline"] = round(pipeline_sec, 4)
 
-    total = round(sum(timings.values()), 4)
+    load_avg = round(os.getloadavg()[0], 2)
     # Full-detail artifact (per-rep triples, probe walls, raw medians):
     # written to a FILE because the driver captures only the last ~2000
     # chars of stdout — r4's all-in-one line outgrew that window and
@@ -183,38 +211,14 @@ def main() -> None:
         "probe_runs_sec": [round(p, 3) for p in probes],
         "sf": sf,
         "bench_rows": result.n_rows,
-        "load_avg_1m": round(os.getloadavg()[0], 2),
+        "load_avg_1m": load_avg,
     }
     os.makedirs(os.path.dirname(detail_path), exist_ok=True)
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1)
 
-    print(
-        json.dumps(
-            {
-                "metric": "validation_pipeline_sec",
-                "value": round(pipeline_sec, 4),
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "total_sec": total,
-                "bench_rows": result.n_rows,
-                "rows_per_sec": round(result.n_rows / pipeline_sec, 1),
-                "n_violations": result.n_violations,
-                "n_dup_keys": result.n_dup_keys,
-                "n_orphans": result.n_orphans,
-                # ambient-load context: this host shows external multi-minute
-                # slow windows (BENCH/BASELINE.md); readers should weigh
-                # wall numbers against the load state they were taken in
-                "load_avg_1m": round(os.getloadavg()[0], 2),
-                "pipeline_median_sec": round(sorted(runs)[len(runs) // 2], 4),
-                # r2-comparable raw statistic (the old headline)
-                "pipeline_min_sec": round(min(runs), 4),
-                "detail_file": "BENCH/last_run_detail.json",
-            },
-            separators=(",", ":"),
-        )
-    )
+    line = headline(timings, sf, result, pipeline_sec, runs, load_avg)
+    print(json.dumps(line, separators=(",", ":")))
     sys.stdout.flush()
 
 

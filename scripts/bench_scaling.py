@@ -233,7 +233,7 @@ three sink/agg actions run concurrently so stage tails and driver gaps
 overlap. Shuffle spill dirs and output sinks sit on tmpfs during
 measurement: the sandbox's single virtual disk is shared by all threads,
 whereas executor-local disks scale with N on a cluster
-(scripts/scaling_runner.py).
+(scripts/scaling_worker.py).
 
 Per-rep job (sec) and ratios:
 

@@ -96,21 +96,17 @@ def test_query_matches_oracle(spark, ddb, name):
 
 def test_bench_stdout_line_fits_driver_window():
     """The driver captures only the last ~2000 chars of bench.py stdout;
-    r4's line outgrew it and BENCH_r04.json recorded parsed: null. Mirror
-    the headline payload bench.py prints (same keys, worst-case widths)
-    and assert it fits with margin — per-rep detail goes to the file."""
+    r4's line outgrew it and BENCH_r04.json recorded parsed: null. Build
+    the headline bench.py prints with worst-case widths and assert it
+    fits with margin — per-rep detail goes to the file."""
     import json
 
-    names = list(entrymod.queries())
-    payload = {
-        "metric": "validation_pipeline_sec", "value": 9999.9999, "unit": "sec",
-        "queries": {n: 9999.999 for n in names},
-        "sf": "0.01", "total_sec": 99999.9999, "bench_rows": 2_000_000,
-        "rows_per_sec": 99999999.9, "n_violations": 999999999,
-        "n_dup_keys": 999999999, "n_orphans": 999999999, "load_avg_1m": 99.99,
-        "pipeline_median_sec": 9999.9999, "pipeline_min_sec": 9999.9999,
-        "detail_file": "BENCH/last_run_detail.json",
-    }
+    from bench import headline
+    from yaschva_spark.pipeline import JobResult
+
+    timings = {n: 9999.999 for n in [*entrymod.queries(), "validation_pipeline"]}
+    result = JobResult(64, 2_000_000, 999_999_999, 999_999_999, 999_999_999, 999_999_999, 0.0)
+    payload = headline(timings, "0.01", result, 0.0199999, [9999.9999] * 5, 99.99)
     line = json.dumps(payload, separators=(",", ":"))
     assert len(line) < 1900, len(line)
 

@@ -182,13 +182,28 @@ def _spark_written_manifest(spark, code, path, *, buckets, with_orphans):
     )
 
 
-@pytest.mark.parametrize("crash_at", ["manifest_publish", "violations_write"])
+class _RefusingRenameFS:
+    """A Hadoop FileSystem proxy whose ``rename`` reports failure (returns
+    false without moving anything), as some object-store connectors do."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def rename(self, src, dst):
+        return False
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+@pytest.mark.parametrize("crash_at", ["manifest_publish", "violations_write", "rename_refused"])
 def test_crash_then_resume_matches_clean_run(spark, code, clean, tmp_path, monkeypatch, crash_at):
     """Crash injection between the two writes: a job that dies after its
-    violations landed (the manifest publish raises, or the violations
-    write raises after writing its files) leaves no manifest rows, and the
-    resume yields the clean run's violations row for row and its totals —
-    nothing duplicated, nothing dropped."""
+    violations landed (the manifest publish raises, the violations write
+    raises after writing its files, or the file system refuses the
+    publish rename) leaves no manifest rows, and the resume yields the
+    clean run's violations row for row and its totals — nothing
+    duplicated, nothing dropped."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     repos = repos_dim(spark)
@@ -203,12 +218,21 @@ def test_crash_then_resume_matches_clean_run(spark, code, clean, tmp_path, monke
         orig_parquet(self, *args, **kwargs)
         raise RuntimeError("injected crash")
 
+    orig_fs = pipeline._hadoop_fs
+
+    def refusing_fs(*args):
+        fs, jpath, jvm = orig_fs(*args)
+        return _RefusingRenameFS(fs), jpath, jvm
+
     with monkeypatch.context() as m:
         if crash_at == "manifest_publish":
             m.setattr(pipeline, "_hadoop_publish", crash)
-        else:
+        elif crash_at == "violations_write":
             m.setattr(DataFrameWriter, "parquet", write_then_crash)
-        with pytest.raises(RuntimeError, match="injected"):
+        else:
+            m.setattr(pipeline, "_hadoop_fs", refusing_fs)
+        expected = OSError if crash_at == "rename_refused" else RuntimeError
+        with pytest.raises(expected, match="injected|could not publish"):
             run_validation_job(spark, code, repos, out, n_buckets=8)
     assert len(list(Path(out, "violations").glob("bucket=*"))) == 8  # durable
     man = Path(out, "manifest")
@@ -276,3 +300,18 @@ def test_one_violation_file_per_bucket(clean):
     assert len(files) == 8
     assert all(len(fs) == 1 for fs in files), files
     assert len({fs[0][:10] for fs in files}) > 1, files
+
+
+def test_clean_run_leaves_readable_violations(spark, tmp_path):
+    """A run whose schema everything passes writes no violation rows, yet
+    the violations table reads back (empty, with its columns) — the
+    manifest certifies readable violations."""
+    out = str(tmp_path / "clean_schema")
+    schema = {c: "any" for c in ("repo", "path", "commit", "lang", "content")}
+    small = code_files(spark, 300, seed=23)
+    res = run_validation_job(spark, small, repos_dim(spark), out, schema=schema, n_buckets=8)
+    assert res.n_violations == 0 and res.n_rows == 300
+    assert spark.read.parquet(f"{out}/manifest").count() >= 1
+    viol = spark.read.parquet(f"{out}/violations")  # must not throw
+    assert viol.count() == 0
+    assert "rule" in viol.columns and "field_path" in viol.columns

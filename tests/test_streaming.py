@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from yaschva_spark import streaming
+from yaschva_spark import pipeline, streaming
 from yaschva_spark.engine import PASS_COL, VIOLATIONS_COL, validate_table
 
 SF = "/root/testdata/sf0.001"
@@ -419,7 +419,7 @@ def test_batch_crash_publishes_nothing_and_replay_matches_clean_run(spark, tmp_p
             fn(code, 3)
     assert not (out / "manifest" / "batch_id=3").exists()
     with monkeypatch.context() as m:
-        m.setattr(streaming, "_publish_manifest_row", crash)
+        m.setattr(pipeline, "_publish_manifest", crash)
         with pytest.raises(RuntimeError, match="injected"):
             fn(code, 3)
     assert (out / "violations" / "batch_id=3").exists()  # durable, not certified

@@ -186,7 +186,7 @@ def _compiled_screens(sc, schema_blob: str, json_col: str):
     return _memoized(
         sc,
         ("screen", schema_blob, json_col),
-        lambda: compile_screens(json.loads(schema_blob), F.col(json_col), staged=True),
+        lambda: compile_screens(json.loads(schema_blob), F.col(json_col)),
         ScreenNotApplicable,
     )
 
@@ -198,7 +198,6 @@ def validate_json_table(
     *,
     keep_cols: list[str] | None = None,
     screen: bool = True,
-    screen_materialize: str = "persist",
     observe: str | None = None,
 ) -> DataFrame:
     """Dynamic path: validate a JSON-text column with exact reference
@@ -234,16 +233,11 @@ def validate_json_table(
     tiny violating tail with a large schema. Both plans are exact; pick
     per corpus.
 
-    The split's one hazard is double evaluation: both branches read the
-    screened projection, and recomputing it means a second scan plus a
-    second ``try_parse_json`` (measured ~2x at sf0.1 — worse than the tax
-    it removes). ``screen_materialize="persist"`` (default) therefore
-    pins the small ``(keep, json, screen, passout)`` projection through
-    :func:`yaschva_spark.cache.persist_tracked` — both branches read it
-    once; callers release it via ``cache.unpersist_intermediates()`` (the
-    bench/test convention). ``"recompute"`` opts out for topologies where
-    re-reading the source twice beats spilling the projection (e.g.
-    storage-rich clusters validating narrow projections of wide tables).
+    Both branches of the split read the screened projection; recomputing
+    it would cost a second scan and a second ``try_parse_json`` (measured
+    ~2x at sf0.1), so the small ``(keep, json, screen, passout)``
+    projection is persisted (:func:`yaschva_spark.cache.persist_tracked`);
+    callers release it via ``cache.unpersist_intermediates()``.
 
     Parallelism guard: validation is CPU-bound (variant screen and/or
     interpreter), so the stage needs at least one task per core. At
@@ -287,13 +281,11 @@ def validate_json_table(
         _SCREEN_OBS.pop(observe, None)  # a stale observation must not answer
     keep = keep_cols if keep_cols is not None else [c for c in df.columns]
     schema_blob = json.dumps(schema)  # ship the schema to executors as text
-    if screen_materialize not in ("persist", "recompute"):
-        raise ValueError(f"screen_materialize: {screen_materialize!r}")
 
     screens = None
     screen_levels: list = []
     if screen:
-        from yaschva_spark.jsonscreen import ScreenNotApplicable
+        from yaschva_spark.jsonscreen import ScreenNotApplicable, select_levels
 
         try:
             # staged: shared subexpressions (parsed variant, per-field
@@ -358,11 +350,7 @@ def validate_json_table(
         return src.mapInPandas(run_batches, schema=out_ddl)
 
     jvmfail = ~screens["pass"] & screens["emit"]
-    staged = src
-    for lvl in screen_levels:
-        if lvl:
-            staged = staged.select("*", *[c.alias(n) for n, c in lvl.items()])
-    scr = staged.select(
+    scr = select_levels(src, screen_levels).select(
         *need,
         screens["pass"].alias("__yv_screen"),
         screens["emit"].alias("__yv_emit"),
@@ -393,10 +381,9 @@ def validate_json_table(
             ),
         )
         _SCREEN_OBS[observe] = obs
-    if screen_materialize == "persist":
-        from yaschva_spark.cache import persist_tracked
+    from yaschva_spark.cache import persist_tracked
 
-        scr = persist_tracked(scr)
+    scr = persist_tracked(scr)
     # ONE emitted branch covers proven-pass AND proven-fail (the r5 fail
     # screen): pure projection, no Arrow crossing; only the residue — rows
     # neither screen can decide or render exactly — runs the interpreter.

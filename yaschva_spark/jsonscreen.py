@@ -94,7 +94,7 @@ import re as _re
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from yaschva_spark.regexdialect import to_java_pattern, typed_unsafe
@@ -983,23 +983,14 @@ def _screen_object(
     return _Screen(cond, out, exact=False, null_out=False)
 
 
-def _compile(schema: Any, raw: Column, stage: _Stager | None = None) -> _Screen:
-    pv = F.try_parse_json(raw)
-    if stage is not None:
-        pv = stage.add(0, pv)
-    return _screen(schema, pv, raw, {}, frozenset(), 0, "$", stage, 0)
+def compile_screens(schema: Any, raw: Column):
+    """One staged compilation, both screens (r5). Returns ``(levels,
+    outputs)``: ``levels`` is an ordered list of ``{column_name: Column}``
+    dicts of shared subexpressions (see :class:`_Stager`) that
+    :func:`select_levels` appends to the frame holding ``raw``, and
+    ``outputs``, whose expressions reference those columns by name, are
 
-
-def compile_pass_screen(schema: Any, raw: Column) -> Column:
-    """Boolean Column: provably ``pass`` for the JSON text column ``raw``.
-    Raises :class:`ScreenNotApplicable` outside the fragment."""
-    return F.coalesce(_compile(schema, raw).cond, F.lit(False))
-
-
-def compile_screens(schema: Any, raw: Column, staged: bool = False):
-    """One compilation, both screens (r5). Returns
-
-    * ``"pass"`` — provably-pass boolean (== :func:`compile_pass_screen`);
+    * ``"pass"`` — provably-pass boolean;
     * ``"pass_out"`` — yv_output for proven-pass rows;
     * ``"emit"`` — outcome (pass OR fail) exactly JVM-representable;
     * ``"viols"`` — the interpreter's violation rows, valid when ``emit``;
@@ -1009,31 +1000,25 @@ def compile_screens(schema: Any, raw: Column, staged: bool = False):
     violations/output — they skip Arrow entirely. Rows with ``~emit`` run
     interpreted. Raises :class:`ScreenNotApplicable` outside the fragment
     (same fragment as the pass screen; the fail side degrades per-node,
-    never widens the fragment).
-
-    ``staged=True`` returns ``(levels, outputs)`` instead: ``levels`` is
-    an ordered list of ``{column_name: Column}`` dicts of shared
-    subexpressions (see :class:`_Stager`); the caller must select each
-    level in order (``df.select("*", *aliases)``) before evaluating
-    ``outputs``, whose expressions reference those columns by name.
-    Measured at sf0.1 this cuts the three-way split's screen cost ~4x —
-    the unstaged tree re-evaluates every leaf's variant ops inside femit,
-    viols, fout, and both dispatch maps."""
-    if staged:
-        stage = _Stager()
-        s = _compile(schema, raw, stage)
-        return stage.levels, {
-            "pass": F.coalesce(s.cond, F.lit(False)),
-            "pass_out": s.out,
-            "emit": F.coalesce(s.femit, F.lit(False)),
-            "viols": s.viols,
-            "fail_out": s.fout,
-        }
-    s = _compile(schema, raw)
-    return {
+    never widens the fragment). Measured at sf0.1, staging cuts the
+    three-way split's screen cost ~4x: an unstaged tree re-evaluates every
+    leaf's variant ops inside femit, viols, fout, and both dispatch maps."""
+    stage = _Stager()
+    pv = stage.add(0, F.try_parse_json(raw))
+    s = _screen(schema, pv, raw, {}, frozenset(), 0, "$", stage, 0)
+    return stage.levels, {
         "pass": F.coalesce(s.cond, F.lit(False)),
         "pass_out": s.out,
         "emit": F.coalesce(s.femit, F.lit(False)),
         "viols": s.viols,
         "fail_out": s.fout,
     }
+
+
+def select_levels(df: DataFrame, levels: list[dict[str, Column]]) -> DataFrame:
+    """``df`` with the staged columns of :func:`compile_screens` appended,
+    one projection per non-empty level, in level order."""
+    for lvl in levels:
+        if lvl:
+            df = df.select("*", *[c.alias(n) for n, c in lvl.items()])
+    return df

@@ -13,16 +13,22 @@ hash of (repo, path) rather than repo alone keeps the hot repo spread across
 buckets (skew containment at the *unit-of-work* level), while the uniqueness
 aggregation handles within-key skew map-side (checks.duplicate_key_fingerprints).
 
-The sink is the commit-marker shape of Delta Lake (VLDB 2020), the same one
-the streaming sink uses per ``batch_id``:
+The sink is the commit-marker shape of Delta Lake (VLDB 2020). Its core
+lives here and the streaming sink (``streaming.make_batch_validator``)
+calls the same pieces: the manifest metric expressions, the violation
+rows, the violations write and the manifest publish. Only the unit column
+(``bucket`` here, ``batch_id`` there), how the metrics are gathered and the
+read-side guard differ.
 
-* the bucket is the unit of work: violations land in ``violations/bucket=N``
-  by dynamic partition overwrite, so a re-run of a bucket REPLACES its
-  rows and never duplicates them;
-* the manifest row is the commit marker: the driver writes the per-bucket
-  rows itself (pyarrow, through the Hadoop FS API) into a hidden
-  ``manifest/_tmp_*`` directory and renames the file into ``manifest/``
-  only after the violations are durable.
+* the unit of work owns a partition: violations land in ``violations/<unit>=N``
+  by dynamic partition overwrite, so a re-run unit REPLACES its rows and
+  never duplicates them; a run that wrote no violation rows leaves an
+  empty schema-bearing file, so the table is readable even after an
+  all-clean run;
+* the manifest row is the commit marker: the driver writes the rows
+  itself (pyarrow, through the Hadoop FS API) into a hidden
+  ``manifest/_tmp_*`` directory and renames the file into place only
+  after the violations are durable; a refused rename raises.
 
 The writing action and two collects run concurrently: the violations
 write, the per-bucket manifest aggregate (at most ``n_buckets`` rows to
@@ -36,14 +42,18 @@ scheduling.
 
 from __future__ import annotations
 
+import io
 import os
 import time
 import uuid
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from yaschva_spark import checks
@@ -52,7 +62,9 @@ from yaschva_spark.fixtures import CODE_SCHEMA
 
 BUCKET_COL = "yv_bucket"
 
-#: manifest columns after ``bucket`` (int) and before ``processed_at``
+#: the manifest numbers both sinks record (:func:`_manifest_metrics`)
+_METRICS = ("n_rows", "n_invalid_rows", "n_violations", "content_digest")
+#: batch manifest columns after ``bucket`` (int) and before ``processed_at``
 #: (timestamp), all Spark ``bigint``; the first four are summed into
 #: :class:`JobResult`
 _MANIFEST_LONGS = (
@@ -87,10 +99,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
 def _write_parquet_file(spark: SparkSession, table, dest_file: str) -> None:
     """Write a pyarrow ``table`` as one parquet file at ``dest_file``
     through the Hadoop FileSystem API (any scheme)."""
-    import io
-
-    import pyarrow.parquet as pq
-
     buf = io.BytesIO()
     pq.write_table(table, buf)
     fs, jpath, _ = _hadoop_fs(spark, dest_file)
@@ -105,14 +113,17 @@ def _hadoop_publish(spark: SparkSession, stage_dir: str, dest_dir: str) -> None:
     """Move staged part files into ``dest_dir`` through the Hadoop
     FileSystem API — one code path for file:, hdfs:, and object-store
     schemes (the driver-local os.rename alternative only ever worked for
-    local paths)."""
+    local paths). A refused rename raises ``OSError``: the caller must
+    not report rows it never published."""
     fs, src, jvm = _hadoop_fs(spark, stage_dir)
     dst = jvm.org.apache.hadoop.fs.Path(dest_dir)
     fs.mkdirs(dst)
     for status in fs.listStatus(src):
         name = status.getPath().getName()
         if name.startswith("part-"):
-            fs.rename(status.getPath(), jvm.org.apache.hadoop.fs.Path(dst, name))
+            target = jvm.org.apache.hadoop.fs.Path(dst, name)
+            if not fs.rename(status.getPath(), target):
+                raise OSError(f"could not publish {target}")
 
 
 def _hadoop_delete(spark: SparkSession, path: str) -> None:
@@ -141,29 +152,79 @@ def _read_manifest(spark: SparkSession, manifest_path: str) -> tuple[set[int], d
     return {r["bucket"] for r in rows}, totals
 
 
-def _publish_manifest(spark: SparkSession, manifest_path: str, rows: list) -> None:
-    """Write the collected per-bucket rows as one parquet file into a
-    hidden ``_tmp_*`` directory under ``manifest_path`` (Spark skips
-    ``_``-prefixed names), then rename it into ``manifest_path``: the
-    buckets become visible all at once or not at all. Columns and Spark
-    types match the manifest files the Spark writer produced in earlier
-    releases (int bucket, bigints, timestamp), so old and new files read
-    back as one table."""
-    import pyarrow as pa
+def _manifest_metrics(content_col: str = "content") -> list[Column]:
+    """The manifest numbers both sinks record per unit of work, as
+    aggregate expressions over a validated frame. ``content_digest`` is an
+    order-insensitive xor of the per-row sha256 invariant (first 15 hex
+    chars as a long): digests are comparable run to run regardless of task
+    ordering, so a resume or a re-run can prove content equality."""
+    return [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum((~F.col(PASS_COL)).cast("long")).alias("n_invalid_rows"),
+        F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
+        F.bit_xor(
+            F.conv(F.substring(F.sha2(F.col(content_col), 256), 1, 15), 16, 10).cast("long")
+        ).alias("content_digest"),
+    ]
 
+
+def _violation_rows(validated: DataFrame, keys: dict[str, Column]) -> DataFrame:
+    """One row per violation: the ``keys`` columns (the unit column first)
+    then ``field_path, rule, error, value``. No explicit ~pass filter: the
+    non-outer explode drops passing rows (empty violations array), so the
+    key expressions run on failing rows only and the violations expression
+    is not re-evaluated inside an extra Filter node."""
+    return validated.select(
+        *[c.alias(n) for n, c in keys.items()], F.explode(VIOLATIONS_COL).alias("v")
+    ).select(*keys, F.col("v.path").alias("field_path"), "v.rule", "v.error", "v.value")
+
+
+def _write_violations(
+    spark: SparkSession,
+    viol: DataFrame,
+    path: str,
+    unit: str,
+    n_violations: Callable[[], int | None],
+) -> None:
+    """Replace the violations of the units in ``viol`` by dynamic partition
+    overwrite of ``path/<unit>=N``. Spark creates no file for an empty
+    task, so when ``n_violations()`` (the gathered metric, read after the
+    write) is 0 or NULL and no seed exists yet, an empty schema-bearing
+    file in ``<unit>=-1`` keeps ``spark.read.parquet(path)`` readable."""
+    (
+        viol.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(unit)
+        .parquet(path)
+    )
+    if n_violations():
+        return
+    seed = os.path.join(path, f"{unit}=-1", "part-00000-init.parquet")
+    fs, jseed, _ = _hadoop_fs(spark, seed)
+    if not fs.exists(jseed):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        _write_parquet_file(spark, to_arrow_schema(viol.drop(unit).schema).empty_table(), seed)
+
+
+def _publish_manifest(spark: SparkSession, manifest_path: str, columns: dict, dest_dir: str) -> None:
+    """Write manifest rows — ``columns`` (name -> pyarrow array) plus one
+    ``processed_at`` stamp — as one parquet file into a hidden ``_tmp_*``
+    directory under ``manifest_path`` (Spark skips ``_``-prefixed names),
+    then move it into ``dest_dir`` with :func:`_hadoop_publish`: the rows
+    become visible all at once or not at all. Callers pass the column
+    names and types the Spark writer produced in earlier releases, so old
+    and new files read back as one table."""
+    n = len(next(iter(columns.values())))
     now = datetime.now(timezone.utc)  # stamped once, like current_timestamp()
     table = pa.table(
-        {
-            "bucket": pa.array([r["bucket"] for r in rows], pa.int32()),
-            **{k: pa.array([r[k] for r in rows], pa.int64()) for k in _MANIFEST_LONGS},
-            "processed_at": pa.array([now] * len(rows), pa.timestamp("us", tz="UTC")),
-        }
+        {**columns, "processed_at": pa.array([now] * n, pa.timestamp("us", tz="UTC"))}
     )
     tag = uuid.uuid4().hex
     stage_dir = os.path.join(manifest_path, f"_tmp_{tag}")
     try:
         _write_parquet_file(spark, table, os.path.join(stage_dir, f"part-00000-{tag}.parquet"))
-        _hadoop_publish(spark, stage_dir, manifest_path)
+        _hadoop_publish(spark, stage_dir, dest_dir)
     finally:
         _hadoop_delete(spark, stage_dir)  # no-op after a clean publish
 
@@ -182,7 +243,7 @@ def run_validation_job(
 
     Outputs under ``out_dir``:
       * ``violations/`` — exploded violation rows, partitioned by bucket
-        (one file per bucket)
+        (one file per bucket; readable even after an all-clean run)
       * ``manifest/``   — one row per processed bucket: lineage + metrics
 
     Totals in the result cover every bucket the manifest certifies;
@@ -211,20 +272,14 @@ def run_validation_job(
     # 1) violation sink (partitioned by bucket for pruning + lineage).
     # content_sha (the per-row invariant, input_hint) is computed here on
     # FAILING rows only — the full-table sha pass happens once, in the
-    # manifest digest below. No explicit ~pass filter: the non-outer
-    # explode drops passing rows (empty violations array) and avoids
-    # re-evaluating the violations expression inside an extra Filter node.
-    viol = validated.select(
-        F.col(BUCKET_COL).alias("bucket"),
-        "repo",
-        "path",
-        "commit",
-        F.sha2(F.col("content"), 256).alias("content_sha"),
-        F.explode(VIOLATIONS_COL).alias("v"),
-    ).select("bucket", "repo", "path", "commit", "content_sha", "v.path", "v.rule", "v.error", "v.value")
-    viol = viol.toDF(
-        "bucket", "repo", "path", "commit", "content_sha",
-        "field_path", "rule", "error", "value",
+    # manifest digest below.
+    viol = _violation_rows(
+        validated,
+        {
+            "bucket": F.col(BUCKET_COL),
+            **{c: F.col(c) for c in ("repo", "path", "commit")},
+            "content_sha": F.sha2(F.col("content"), 256),
+        },
     )
 
     # 2) uniqueness on (repo, path, commit): fingerprint-shuffle hash agg —
@@ -259,22 +314,10 @@ def run_validation_job(
     with_dim = validated.join(
         dim_keys, validated["repo"] == F.col("__dim_repo"), "left"
     )
-    manifest = (
-        with_dim.groupBy(F.col(BUCKET_COL).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col(PASS_COL)).cast("long")).alias("n_invalid_rows"),
-            F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
-            F.sum(F.col("__dim_repo").isNull().cast("long")).alias("n_orphans"),
-            F.approx_count_distinct("repo").alias("n_repos"),
-            # content-integrity lineage: order-insensitive xor digest of the
-            # per-row sha256 invariant (first 15 hex chars as a long) —
-            # bucket digests are comparable run-to-run regardless of task
-            # ordering, so a resume or a re-run can prove content equality
-            F.bit_xor(
-                F.conv(F.substring(F.sha2(F.col("content"), 256), 1, 15), 16, 10).cast("long")
-            ).alias("content_digest"),
-        )
+    manifest = with_dim.groupBy(F.col(BUCKET_COL).alias("bucket")).agg(
+        *_manifest_metrics(),
+        F.sum(F.col("__dim_repo").isNull().cast("long")).alias("n_orphans"),
+        F.approx_count_distinct("repo").alias("n_repos"),
     )
 
     # The three actions run CONCURRENTLY (one SparkContext schedules the
@@ -293,22 +336,28 @@ def run_validation_job(
     # correct, just not free). Crash windows: before publish -> no manifest
     # rows, the buckets reprocess and their violation partitions are
     # overwritten (exactly once); after publish -> fully consistent. A
-    # failed violations write aborts the publish.
+    # failed violations write aborts the publish. The empty-violations seed
+    # is decided from the collected rows, so the write waits for them.
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with ThreadPoolExecutor(max_workers=3) as pool:
-        viol_f = pool.submit(
-            lambda: viol.repartition(n_parts, "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(violations_path)
-        )
         manifest_f = pool.submit(manifest.collect)
+        viol_f = pool.submit(
+            _write_violations,
+            spark,
+            viol.repartition(n_parts, "bucket"),
+            violations_path,
+            "bucket",
+            lambda: sum(r["n_violations"] or 0 for r in manifest_f.result()),
+        )
         dup_f = pool.submit(lambda: dup_summary_df.collect()[0])
         viol_f.result()  # durability barrier: violations first
         rows = manifest_f.result()
         dup_summary = dup_f.result()
-    _publish_manifest(spark, manifest_path, rows)
+    columns = {
+        "bucket": pa.array([r["bucket"] for r in rows], pa.int32()),
+        **{k: pa.array([r[k] for r in rows], pa.int64()) for k in _MANIFEST_LONGS},
+    }
+    _publish_manifest(spark, manifest_path, columns, manifest_path)
 
     totals = {k: prior[k] + sum(r[k] or 0 for r in rows) for k in _TOTALS}
     return JobResult(

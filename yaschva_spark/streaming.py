@@ -11,19 +11,22 @@ firehose validated in-flight, violation rows written per batch, windowed
 violation rates feeding alerting. ``trigger(availableNow=True)`` turns the
 same query into a catch-up batch over a backlog — the streaming analog of
 the pipeline's checkpoint resume (plus Spark's own checkpointLocation for
-exactly-once sinks).
+exactly-once sinks). The incremental sink runs the batch pipeline's
+commit-marker sink core (:mod:`yaschva_spark.pipeline`) with ``batch_id``
+as the unit of work.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from yaschva_spark import pipeline
 from yaschva_spark.engine import PASS_COL, VIOLATIONS_COL, validate_table
-from yaschva_spark.pipeline import _write_parquet_file
 
 
 def read_stream(
@@ -123,57 +126,6 @@ def dedup_stream(
     )
 
 
-def _dir_has_parquet(fs, jpath) -> bool:
-    if not fs.exists(jpath):
-        return False
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("batch_id="):
-            for leaf in fs.listStatus(status.getPath()):
-                if leaf.getPath().getName().endswith(".parquet"):
-                    return True
-    return False
-
-
-def _publish_manifest_row(
-    spark: SparkSession, man_path: str, batch_id: int, metrics: dict, stream_id: str
-) -> None:
-    """Write the batch's one manifest row from the driver and make it
-    visible atomically: the parquet file goes into a ``_tmp_*`` directory
-    under ``man_path`` (hidden from readers: Spark skips ``_``-prefixed
-    names without ``=``), which is then renamed to ``batch_id=N`` — the
-    commit-marker publish of Delta Lake (VLDB 2020). The file holds the
-    same columns and Spark types as a Spark-written manifest partition
-    (bigint x4, string, timestamp), so old and new partitions read back
-    together."""
-    import uuid
-    from datetime import datetime, timezone
-
-    import pyarrow as pa
-
-    from yaschva_spark.pipeline import _hadoop_delete, _hadoop_fs
-
-    longs = ("n_rows", "n_invalid_rows", "n_violations", "content_digest")
-    table = pa.table(
-        {
-            **{k: pa.array([metrics[k]], pa.int64()) for k in longs},
-            "stream_id": pa.array([stream_id], pa.string()),
-            "processed_at": pa.array([datetime.now(timezone.utc)], pa.timestamp("us", tz="UTC")),
-        }
-    )
-    tag = uuid.uuid4().hex
-    tmp = os.path.join(man_path, f"_tmp_{batch_id}_{tag}")
-    try:
-        _write_parquet_file(spark, table, os.path.join(tmp, f"part-00000-{tag}.parquet"))
-        fs, dst, jvm = _hadoop_fs(spark, os.path.join(man_path, f"batch_id={batch_id}"))
-        if fs.exists(dst):
-            fs.delete(dst, True)  # torn earlier attempt: the guard found no row
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst):
-            raise OSError(f"incremental sink: could not publish manifest {dst}")
-    finally:
-        _hadoop_delete(spark, tmp)  # no-op after a clean rename
-
-
 def make_batch_validator(
     schema: dict,
     out_dir: str,
@@ -189,16 +141,12 @@ def make_batch_validator(
     man_path = os.path.join(out_dir, "manifest")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from yaschva_spark.pipeline import _hadoop_fs
-
         spark = batch_df.sparkSession
         # O(1) replay guard: the manifest is partitioned by batch_id, so
         # the probe touches ONE partition directory — never the k-batch
         # manifest scan that would creep quadratically on a long stream.
         part_dir = os.path.join(man_path, f"batch_id={batch_id}")
-        fs, part_jpath, _ = _hadoop_fs(spark, part_dir)
+        fs, part_jpath, _ = pipeline._hadoop_fs(spark, part_dir)
         if fs.exists(part_jpath):
             try:
                 committed = spark.read.parquet(part_dir).collect()
@@ -219,47 +167,26 @@ def make_batch_validator(
                     "deleted/moved?): restore the original checkpoint or "
                     "use a fresh out_dir."
                 )
+            fs.delete(part_jpath, True)  # torn earlier attempt: certifies nothing
         # the manifest numbers ride on the violations write as one
         # Observation: no second Spark job re-scans the batch for them
         obs = Observation()
         validated = validate_table(batch_df, schema).observe(
-            obs,
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col(PASS_COL)).cast("long")).alias("n_invalid_rows"),
-            F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
-            F.bit_xor(
-                F.conv(F.substring(F.sha2(F.col(content_col), 256), 1, 15), 16, 10).cast("long")
-            ).alias("content_digest"),
+            obs, *pipeline._manifest_metrics(content_col)
         )
-        viol = validated.select(
-            F.lit(batch_id).alias("batch_id"),
-            *[F.col(c) for c in id_cols],
-            F.explode(VIOLATIONS_COL).alias("v"),
-        ).select(
-            "batch_id", *id_cols, "v.path", "v.rule", "v.error", "v.value"
-        ).toDF("batch_id", *id_cols, "field_path", "rule", "error", "value")
-        # partitioned by batch_id: a torn first attempt is REPLACED by the
-        # replay (dynamic partition overwrite), never duplicated
-        (
-            viol.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(viol_path)
+        viol = pipeline._violation_rows(
+            validated, {"batch_id": F.lit(batch_id), **{c: F.col(c) for c in id_cols}}
         )
-        # an all-clean stream writes no violation files at all (Spark
-        # skips file creation for empty tasks); seed one schema-bearing
-        # empty partition so the documented contract — "a manifest row
-        # certifies readable violations" — holds for consumers doing
-        # spark.read.parquet(viol_path)
-        vfs, vroot, _ = _hadoop_fs(spark, viol_path)
-        if not _dir_has_parquet(vfs, vroot):
-            _write_parquet_file(
-                spark,
-                to_arrow_schema(viol.drop("batch_id").schema).empty_table(),
-                os.path.join(viol_path, "batch_id=-1", "part-00000-init.parquet"),
-            )
+        pipeline._write_violations(
+            spark, viol, viol_path, "batch_id", lambda: obs.get["n_violations"]
+        )
         # violations are durable: only now may the manifest row appear
-        _publish_manifest_row(spark, man_path, batch_id, obs.get, stream_id)
+        metrics = obs.get
+        columns = {
+            **{k: pa.array([metrics[k]], pa.int64()) for k in pipeline._METRICS},
+            "stream_id": pa.array([stream_id], pa.string()),
+        }
+        pipeline._publish_manifest(spark, man_path, columns, part_dir)
 
     return process_batch
 
@@ -283,20 +210,23 @@ def incremental_validation_sink(
     ``batch_id``.
 
     One Spark job per batch: the manifest numbers are an ``Observation``
-    (a CollectMetrics node) on the violations write, and the driver writes
-    the manifest row itself with pyarrow into a hidden ``_tmp_*``
-    directory, then renames that directory to ``manifest/batch_id=N`` —
-    the row becomes visible all at once or not at all.
+    (a CollectMetrics node) on the violations write. The sink core is the
+    batch pipeline's (:mod:`yaschva_spark.pipeline`): the same metric
+    expressions, violation rows, partition-overwrite write and rename
+    publish, with ``batch_id`` as the unit of work.
 
     Durability contract matches the batch pipeline: within a batch the
     violations write completes BEFORE the manifest row appears, so a
-    manifest entry always certifies durable, readable violations (an
-    all-clean stream still leaves a schema-bearing empty file). Restart
-    safety is two-layered: Spark's ``checkpointLocation`` replays the
-    failed batch with the same batch_id, and the batch function is
-    IDEMPOTENT — a batch_id already committed BY THIS STREAM (manifest
-    rows carry a stream identity derived from the checkpoint location) is
-    skipped, a torn first attempt is overwritten partition-wise, and a
+    manifest entry always certifies durable, readable violations (a batch
+    that wrote no violation rows leaves a schema-bearing empty file unless
+    one exists). The driver writes the row with pyarrow into a hidden
+    ``manifest/_tmp_*`` directory and renames the file into
+    ``manifest/batch_id=N``; a refused rename raises. Restart safety is
+    two-layered: Spark's ``checkpointLocation`` replays the failed batch
+    with the same batch_id, and the batch function is IDEMPOTENT — a
+    batch_id already committed BY THIS STREAM (manifest rows carry a
+    stream identity derived from the checkpoint location) is skipped, a
+    torn first attempt is deleted and overwritten partition-wise, and a
     batch_id collision from a different checkpoint raises instead of
     silently dropping data. Both manifest and violations are partitioned
     by batch_id, so the replay probe reads one partition — O(1) per
